@@ -8,7 +8,7 @@ into the corpus. Reference analog: gardener's dedup of each incoming
 archive against base_tables lifted from key-equality to content
 near-duplication (/root/reference/schema/README.md:6-10).
 
-Two indexes share one segment protocol (``_SegmentedIndex``):
+Two indexes share one segmented base (``_SegmentedIndex``):
 
   * ``NearDupIndex`` — text. Stores each admitted document's 64-hash
     MinHash signature AND its 32 LSH band keys (both persisted at admit
@@ -32,88 +32,31 @@ PERSISTED band files (shuffle bounded by band buckets), then a score join
 fetching only candidate rows. The corpus is never re-hashed, never
 re-projected, never cross-joined.
 
-Durability: a segment (sig + band parquet under one directory) becomes
-visible only via the atomic pointer swap — a crashed append is invisible.
-Probe-only calls write their batch segment to a TEMP dir (cleaned at
-process exit), not the index.
+Durability: segments (sig + band parquet under one directory) live in a
+``lake/segstore.py`` store — visible only via its atomic pointer swap
+(a crashed append is invisible), name-ledger idempotent across
+compaction, superseded files swept one commit later. Probe-only calls
+write their batch segment to a TEMP dir (cleaned at process exit), not
+the index.
 """
 
 from __future__ import annotations
 
 import atexit
-import json
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from etl_spark.lake.table import _atomic_write
+from etl_spark.lake.segstore import SegmentStore, parquet_files, parquet_rows
 
-_PTR = "CURRENT"
-
-# absorbed-name ledger: inline tail size before spilling to an immutable
-# cumulative file (the table's ledger-snapshot pattern applied to the
-# index pointer) — keeps the per-trigger pointer parse O(live + tail)
-# under unbounded uptime instead of O(all names ever absorbed)
-ABSORBED_INLINE_MAX = 256
-#: process-wide cache of spilled absorbed-name sets, keyed by the spill
-#: file's full path — spill files are immutable (each spill writes a new
-#: name), so a cached set can never go stale
-_ABSORBED_CACHE: dict[str, frozenset] = {}
-
-
-def _load_absorbed_spill(base_path: str, fname: str | None) -> frozenset:
-    if not fname:
-        return frozenset()
-    full = os.path.join(base_path, fname)
-    got = _ABSORBED_CACHE.get(full)
-    if got is None:
-        try:
-            with open(full) as f:
-                got = frozenset(json.load(f))
-        except OSError:
-            got = frozenset()
-        _ABSORBED_CACHE[full] = got
-    return got
-
-
-def _merge_absorbed(
-    base_path: str, meta: dict, newly_absorbed: list[str]
-) -> str | None:
-    """Fold newly absorbed names into meta's absorbed ledger IN PLACE:
-    tail-append, spilling tail ∪ spill to a fresh immutable cumulative
-    file once the tail outgrows ``ABSORBED_INLINE_MAX``. The caller
-    commits meta (pointer swap) and may then delete the RETURNED
-    superseded spill file name (None when no spill happened)."""
-    tail = list(
-        dict.fromkeys(meta.get("absorbed", []) + newly_absorbed)
-    )
-    if len(tail) <= ABSORBED_INLINE_MAX:
-        meta["absorbed"] = tail
-        return None
-    old = meta.get("absorbed_spill")
-    merged = sorted(_load_absorbed_spill(base_path, old) | set(tail))
-    fname = f"ABSORBED-{uuid.uuid4().hex[:12]}.json"
-    _atomic_write(os.path.join(base_path, fname), json.dumps(merged))
-    _ABSORBED_CACHE[os.path.join(base_path, fname)] = frozenset(merged)
-    meta["absorbed"] = []
-    meta["absorbed_spill"] = fname
-    return old
-
-
-def _absorbed_contains(base_path: str, meta: dict, seg: str) -> bool:
-    """Absorbed-name membership: inline tail (O(tail), bounded) first,
-    then the immutable spill set (loaded once per process per spill
-    generation — amortized O(1) across a stream's triggers)."""
-    if seg in meta.get("absorbed", []):
-        return True
-    return seg in _load_absorbed_spill(base_path, meta.get("absorbed_spill"))
+#: compaction output file size target (bytes per merged sig/bands file)
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 class _SegmentedIndex:
-    """Append-only parquet segments + atomic pointer; see module doc."""
+    """Append-only parquet segments in a ``SegmentStore``; see module doc."""
 
     #: subclasses set: id column name and score column name
     ID_COL = "doc_id"
@@ -121,26 +64,13 @@ class _SegmentedIndex:
 
     def __init__(self, path: str):
         self.path = path
-        os.makedirs(path, exist_ok=True)
+        self.store = SegmentStore(path, r"(seg|compact)-.+")
 
     # ------------------------------------------------------------- state
     def _meta(self) -> dict:
-        p = os.path.join(self.path, _PTR)
-        if not os.path.exists(p):
-            return {"segments": [], "n_docs": 0, "params": self._params()}
-        with open(p) as f:
-            return json.loads(f.read())
-
-    def _is_committed_seg(self, seg: str, m: dict | None = None) -> bool:
-        """Segment-name membership for ingest idempotence: live segments
-        PLUS names absorbed by compaction — a redelivered trigger whose
-        segment was since compacted must still no-op its write (the
-        deterministic-name ledger survives compaction; see ``compact``).
-        Absorbed names live in a bounded inline tail + an immutable
-        cumulative spill set, so this stays O(live + tail) per call
-        under unbounded uptime (spill loads are process-cached)."""
-        m = self._meta() if m is None else m
-        return seg in m["segments"] or _absorbed_contains(self.path, m, seg)
+        return self.store.meta(
+            {"segments": [], "n_docs": 0, "params": self._params()}
+        )
 
     def _params(self) -> dict:
         return {}
@@ -149,11 +79,13 @@ class _SegmentedIndex:
     def n_docs(self) -> int:
         return self._meta()["n_docs"]
 
-    def _commit_segment(self, seg: str, n: int) -> None:
-        m = self._meta()
-        m["segments"].append(seg)
-        m["n_docs"] += n
-        _atomic_write(os.path.join(self.path, _PTR), json.dumps(m))
+    def _admit(self, spark: SparkSession, batch: DataFrame, seg: str) -> int:
+        """Write + commit the batch as segment ``seg``; a name already in
+        the store's ledger (live or absorbed by compaction) is a no-op."""
+        return self.store.append(
+            self._meta(), seg,
+            lambda d: self._write_segment(spark, batch, d), "n_docs",
+        )
 
     def _read_committed(
         self, spark: SparkSession, sub: str, exclude: str | None = None
@@ -186,37 +118,24 @@ class _SegmentedIndex:
 
     # ------------------------------------------------------------ engine
     def _write_segment(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        base_dir: str,
-        seg_name: str | None = None,
-    ) -> tuple[str, int]:
+        self, spark: SparkSession, batch: DataFrame, seg_dir: str
+    ) -> int:
         """Materialize the batch's signatures AND band rows under one
         segment dir — the single execution of the hash stage per batch;
         everything downstream (including the index side of every future
-        probe) reads these files back."""
-        import pyarrow.parquet as pq
-
-        seg = seg_name or f"seg-{uuid.uuid4().hex[:12]}"
-        sig_dir = os.path.join(base_dir, seg, "sig")
+        probe) reads these files back. Returns the docs written."""
+        sig_dir = os.path.join(seg_dir, "sig")
         self._sigs_of(batch).write.mode("overwrite").parquet(sig_dir)
         sigs = spark.read.parquet(sig_dir)
         self._bands_of(sigs).write.mode("overwrite").parquet(
-            os.path.join(base_dir, seg, "bands")
+            os.path.join(seg_dir, "bands")
         )
-        n = sum(
-            pq.read_metadata(os.path.join(sig_dir, f)).num_rows
-            for f in os.listdir(sig_dir)
-            if f.endswith(".parquet")
-        )
-        return seg, n
+        return parquet_rows(sig_dir)
 
     def _dups_for_segment(
         self,
         spark: SparkSession,
-        base_dir: str,
-        seg: str,
+        seg_dir: str,
         threshold: float,
         exclude_seg: str | None = None,
         with_origin: bool = False,
@@ -250,8 +169,8 @@ class _SegmentedIndex:
         still avoided (counting its buckets would aggregate the corpus
         each batch) — content-unique admission makes byte-equal index
         floods structurally impossible, and the batch side stays capped."""
-        sigs = spark.read.parquet(os.path.join(base_dir, seg, "sig"))
-        raw_nb = spark.read.parquet(os.path.join(base_dir, seg, "bands"))
+        sigs = spark.read.parquet(os.path.join(seg_dir, "sig"))
+        raw_nb = spark.read.parquet(os.path.join(seg_dir, "bands"))
         idx_sigs = self._read_committed(spark, "sig", exclude=exclude_seg)
 
         def _cap(bands: DataFrame) -> DataFrame:
@@ -344,12 +263,7 @@ class _SegmentedIndex:
 
     # ------------------------------------------------------- maintenance
     def compact(
-        self,
-        spark: SparkSession,
-        min_segments: int = 2,
-        keep_last: int = 1,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        remove_absorbed: bool = True,
+        self, spark: SparkSession, min_segments: int = 2, keep_last: int = 1
     ) -> dict | None:
         """Merge committed segments' sig/band files into ONE consolidated
         segment behind the atomic pointer swap — the index analog of the
@@ -373,81 +287,35 @@ class _SegmentedIndex:
             of OLDER files never reach the gate: the table's per-file
             ledger filters them first.)
           * the deterministic segment-name ledger SURVIVES absorption
-            (``absorbed`` list in the pointer), so a redelivered trigger
-            whose segment was compacted away still no-ops its write.
-          * single writer, no in-flight probes older than the swap:
-            ``remove_absorbed`` deletes the merged dirs after the swap,
-            which invalidates lazy plans still reading them (the
-            streaming loop runs maintenance between triggers; pass
-            False to keep the files for concurrent readers and sweep
-            later).
+            (``absorbed`` in the pointer), so a redelivered trigger whose
+            segment was compacted away still no-ops its write.
+          * absorbed dirs are retired, not deleted: lazy plans built
+            before the swap keep reading until the NEXT commit sweeps
+            them (lake/segstore.py).
 
         Returns {"absorbed": n, "segments": n_after, "files_before": n,
         "files_after": n} or None when below ``min_segments``."""
-        m = self._meta()
-        live = list(m["segments"])
-        absorbable = live[: max(0, len(live) - keep_last)]
-        if len(absorbable) < min_segments:
-            return None
-        # sweep orphans from crashed earlier compactions (dir written,
-        # pointer never swapped / rmtree never ran). Safe under the
-        # single-writer contract: no gate write is in flight, so any
-        # seg-/compact- dir not referenced by the live pointer is dead.
-        for d in os.listdir(self.path):
-            if (
-                (d.startswith("seg-") or d.startswith("compact-"))
-                and d not in live
-                and os.path.isdir(os.path.join(self.path, d))
-            ):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        comp = f"compact-{uuid.uuid4().hex[:12]}"
-        files_before = files_after = 0
-        for sub in ("sig", "bands"):
-            paths = [os.path.join(self.path, s, sub) for s in absorbable]
-            nbytes = 0
-            nfiles = 0
-            for p in paths:
-                for fn in os.listdir(p):
-                    if fn.endswith(".parquet"):
-                        nbytes += os.path.getsize(os.path.join(p, fn))
-                        nfiles += 1
-            files_before += nfiles
-            n_out = max(1, -(-nbytes // target_file_bytes))  # ceil-div
-            out = os.path.join(self.path, comp, sub)
-            # coalesce (no shuffle) to the byte-targeted file count —
-            # the whole point is turning O(triggers) small files into
-            # O(bytes / target) big ones. mergeSchema: a mixed-era index
-            # (th-carrying gate segments alongside th-less legacy add()
-            # segments) must not let an arbitrary file's footer win and
-            # bake the narrower schema in permanently — compaction is a
-            # pure file merge, columns included (absent values → NULL,
-            # the same semantics the union probe read sees).
-            spark.read.option("mergeSchema", "true").parquet(
-                *paths
-            ).coalesce(n_out).write.mode("overwrite").parquet(out)
-            files_after += sum(
-                1 for fn in os.listdir(out) if fn.endswith(".parquet")
-            )
-        m2 = self._meta()
-        old_spill = _merge_absorbed(self.path, m2, absorbable)
-        m2["segments"] = [comp] + [
-            s for s in m2["segments"] if s not in set(absorbable)
-        ]
-        _atomic_write(os.path.join(self.path, _PTR), json.dumps(m2))
-        if old_spill:
-            try:
-                os.remove(os.path.join(self.path, old_spill))
-            except OSError:
-                pass
-        if remove_absorbed:
-            for s in absorbable:
-                shutil.rmtree(os.path.join(self.path, s), ignore_errors=True)
-        return {
-            "absorbed": len(absorbable),
-            "segments": len(m2["segments"]),
-            "files_before": files_before,
-            "files_after": files_after,
-        }
+
+        def rewrite(src: list[str], out: str) -> None:
+            for sub in ("sig", "bands"):
+                paths = [os.path.join(s, sub) for s in src]
+                nbytes = sum(
+                    os.path.getsize(f) for p in paths for f in parquet_files(p)
+                )
+                # coalesce (no shuffle) to the byte-targeted file count —
+                # the whole point is turning O(triggers) small files into
+                # O(bytes / target) big ones. mergeSchema: a mixed-era
+                # index (th-carrying gate segments alongside th-less
+                # legacy add() segments) must not let an arbitrary file's
+                # footer win and bake the narrower schema in permanently —
+                # compaction is a pure file merge, columns included
+                # (absent values → NULL, the same semantics the union
+                # probe read sees).
+                spark.read.option("mergeSchema", "true").parquet(*paths).coalesce(
+                    max(1, -(-nbytes // TARGET_FILE_BYTES))  # ceil-div
+                ).write.mode("overwrite").parquet(os.path.join(out, sub))
+
+        return self.store.compact(rewrite, keep_last, min_segments)
 
     # ------------------------------------------------------------- API
     def find_dups(
@@ -456,31 +324,29 @@ class _SegmentedIndex:
         """Near-dup pairs for an arriving batch: batch-vs-index plus
         in-batch (id < dup_of). Does NOT mutate the index — the probe's
         segment lives in a temp dir removed at process exit."""
-        tmp = tempfile.mkdtemp(prefix="etl_spark_ndprobe_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        seg, _ = self._write_segment(spark, batch, tmp)
-        return self._dups_for_segment(spark, tmp, seg, threshold)
+        return self._dups_for_segment(
+            spark, self._temp_probe_segment(spark, batch), threshold
+        )
 
     def add(self, spark: SparkSession, batch: DataFrame) -> int:
         """Append the batch's signatures + bands to the index (atomic:
         visible only via the pointer swap). Returns docs added."""
-        seg, n = self._write_segment(spark, batch, self.path)
-        self._commit_segment(seg, n)
-        return n
+        return self._admit(spark, batch, self.store.new_name("seg"))
 
     def check_and_add(
         self, spark: SparkSession, batch: DataFrame, threshold: float = 0.5
     ) -> DataFrame:
-        """The ingest-gate composition: return the batch's near-dup pairs
-        (vs corpus and in-batch), then admit the batch. One hash pass per
-        batch (the segment write). Snapshot isolation is structural: the
-        returned lazy plan reads only immutable parquet (the new segment +
-        the index segments committed BEFORE this call), so it is
-        unaffected by the commit below or by any later appends."""
-        seg, n = self._write_segment(spark, batch, self.path)
-        dups = self._dups_for_segment(spark, self.path, seg, threshold)
-        self._commit_segment(seg, n)
-        return dups
+        """The ingest-gate composition: admit the batch, then return its
+        near-dup pairs (vs the corpus before it, and in-batch). One hash
+        pass per batch (the segment write). Snapshot isolation is
+        structural: the returned lazy plan reads only immutable parquet
+        (the new segment + the index segments committed BEFORE this
+        call), so it is unaffected by any later appends."""
+        seg = self.store.new_name("seg")
+        self._admit(spark, batch, seg)
+        return self._dups_for_segment(
+            spark, os.path.join(self.path, seg), threshold, exclude_seg=seg
+        )
 
     def gate_and_admit(
         self, spark: SparkSession, batch: DataFrame, seg_name: str,
@@ -508,30 +374,38 @@ class _SegmentedIndex:
         redelivered-absorbed trigger's drop set is a merge the table's
         commit ledger no-ops anyway (``keep_last`` ≥ 1 keeps the one
         redelivery that DOES matter — the newest segment — exact)."""
-        seg = f"seg-{seg_name}"
-        if not self._is_committed_seg(seg):
-            _, n = self._write_segment(spark, batch, self.path, seg_name=seg)
-            self._commit_segment(seg, n)
-        if seg in self._meta()["segments"]:
-            return self._dups_for_segment(
-                spark, self.path, seg, threshold, exclude_seg=seg,
-                with_origin=True, max_band_bucket=max_band_bucket,
-            )
-        base, pseg = self._temp_probe_segment(spark, batch, seg)
-        return self._dups_for_segment(
-            spark, base, pseg, threshold,
-            with_origin=True, max_band_bucket=max_band_bucket,
+        return self._admit_and_probe(
+            spark, batch, f"seg-{seg_name}", threshold,
+            max_band_bucket=max_band_bucket,
         )
 
-    def _temp_probe_segment(
-        self, spark: SparkSession, batch: DataFrame, seg: str
-    ) -> tuple[str, str]:
-        """Probe-side segment in a temp dir (find_dups shape) for
-        absorbed-segment redeliveries — cleaned at process exit."""
-        tmp = tempfile.mkdtemp(prefix="etl_spark_ndabs_")
+    def _admit_and_probe(
+        self, spark: SparkSession, batch: DataFrame, seg: str,
+        threshold: float, **probe_kw,
+    ) -> DataFrame:
+        """Admit ``batch`` as ``seg`` (no-op when already in the ledger),
+        then probe it against the index minus its own segment."""
+        self._admit(spark, batch, seg)
+        if seg in self._meta()["segments"]:
+            seg_dir, exclude = os.path.join(self.path, seg), seg
+        else:
+            # absorbed-segment redelivery: files merged away by compact —
+            # recompute the probe side into a temp dir (see gate_and_admit
+            # for why the resulting self-match noise is harmless)
+            seg_dir, exclude = self._temp_probe_segment(spark, batch), None
+        return self._dups_for_segment(
+            spark, seg_dir, threshold, exclude_seg=exclude,
+            with_origin=True, **probe_kw,
+        )
+
+    def _temp_probe_segment(self, spark: SparkSession, batch: DataFrame) -> str:
+        """Probe-side segment in a temp dir (not the index) — cleaned at
+        process exit."""
+        tmp = tempfile.mkdtemp(prefix="etl_spark_ndprobe_")
         atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        pseg, _ = self._write_segment(spark, batch, tmp, seg_name=seg)
-        return tmp, pseg
+        seg_dir = os.path.join(tmp, "probe")
+        self._write_segment(spark, batch, seg_dir)
+        return seg_dir
 
 
 class NearDupIndex(_SegmentedIndex):
@@ -556,11 +430,7 @@ class NearDupIndex(_SegmentedIndex):
         hash_fn: str | None = None,
     ):
         super().__init__(path)
-        stored: dict = {}
-        p = os.path.join(path, _PTR)
-        if os.path.exists(p):
-            with open(p) as f:
-                stored = json.load(f).get("params") or {}
+        stored = (self.store.meta() or {}).get("params") or {}
         if stored.get("n_minhash") is None:
             from etl_spark.ops.textops import N_MINHASH
 
@@ -698,36 +568,20 @@ class NearDupIndex(_SegmentedIndex):
                 .localCheckpoint(eager=True)  # one index scan, reused below
             )
             parts.append(vs_idx)
-        def _reps() -> DataFrame:
-            reps = th_groups.select(
-                F.col("k.doc_id").alias("doc_id"), F.col("k.text").alias("text")
+        reps = th_groups.select(
+            F.col("k.doc_id").alias("doc_id"), F.col("k.text").alias("text")
+        )
+        if vs_idx is not None:
+            # content the index already has is not re-admitted; the known
+            # set comes from the (already materialized) th join —
+            # batch-sized, broadcast into the anti join
+            reps = reps.join(
+                F.broadcast(vs_idx.select("doc_id").distinct()),
+                "doc_id", "left_anti",
             )
-            if vs_idx is not None:
-                # content the index already has is not re-admitted; the
-                # known set comes from the (already materialized) th join
-                # — batch-sized, broadcast into the anti join
-                reps = reps.join(
-                    F.broadcast(vs_idx.select("doc_id").distinct()),
-                    "doc_id", "left_anti",
-                )
-            return reps
-
-        if not self._is_committed_seg(seg):
-            _, n = self._write_segment(spark, _reps(), self.path, seg_name=seg)
-            self._commit_segment(seg, n)
-        if seg in self._meta()["segments"]:
-            base, pseg, exclude = self.path, seg, seg
-        else:
-            # absorbed-segment redelivery: files merged away by compact —
-            # recompute the probe side into a temp dir (see the base
-            # gate_and_admit docstring for why the resulting self-match
-            # noise is harmless)
-            base, pseg = self._temp_probe_segment(spark, _reps(), seg)
-            exclude = None
-        out = self._dups_for_segment(
-            spark, base, pseg, threshold, exclude_seg=exclude,
-            with_origin=True, max_band_bucket=max_band_bucket,
-            broadcast_probe=True,
+        out = self._admit_and_probe(
+            spark, reps, seg, threshold,
+            max_band_bucket=max_band_bucket, broadcast_probe=True,
         )
         for p in parts:
             out = out.unionByName(p)

@@ -269,62 +269,34 @@ def fold_progress(
     spark: SparkSession, prog_dir: str, out_path: str | None = None
 ) -> int:
     """Fold the driver-local JSONL progress log into a snapshot-versioned
-    parquet table (parquet dir per fold + atomic pointer swap — the MV
-    storage pattern), so fleet progress is queryable with the same
+    parquet table (a ``lake/segstore.py`` store: parquet dir per fold +
+    atomic pointer swap, the previous fold swept one commit later — the
+    MV storage pattern), so fleet progress is queryable with the same
     stable-snapshot semantics as every other lake structure while the
     hot path keeps its one-os.write-per-trigger cost (a per-trigger
     parquet append measured ~2× the whole trigger wall — the round-4
     lesson). Rows are batch_id-deduped on the way in (``progress_df``).
     Idempotent: re-folding the same log replaces the snapshot. Returns
-    rows folded. Reader: ``folded_progress_df``."""
-    import os
-    import uuid as _uuid
-
-    from etl_spark.lake.table import _atomic_write
-
-    import pyarrow.parquet as _pq
-
+    rows folded (parquet footers of the written snapshot — a df.count()
+    would re-read the JSONL and could disagree with the snapshot if rows
+    were appended in between). Reader: ``folded_progress_df``."""
     out = out_path or f"{prog_dir.rstrip('/')}_table"
-    os.makedirs(out, exist_ok=True)
-    df = progress_df(spark, prog_dir)
-    rel = f"fold-{_uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(os.path.join(out, rel))
-    # row count from the just-written parquet footers (driver-side, no
-    # second job — a df.count() here would re-read the JSONL and re-run
-    # the dedup window, and could disagree with the written snapshot if
-    # rows were appended in between)
-    n = sum(
-        _pq.read_metadata(os.path.join(out, rel, f)).num_rows
-        for f in os.listdir(os.path.join(out, rel))
-        if f.endswith(".parquet")
-    )
-    p = os.path.join(out, _PROG_PTR)
-    old = None
-    if os.path.exists(p):
-        import json as _json
-
-        with open(p) as f:
-            old = _json.loads(f.read())["data"]
-    import json as _json
-
-    _atomic_write(p, _json.dumps({"data": rel, "n_rows": n}))
-    if old is not None and old != rel:
-        import shutil as _shutil
-
-        _shutil.rmtree(os.path.join(out, old), ignore_errors=True)
-    return n
+    return _fold_store(out).replace(progress_df(spark, prog_dir), "fold")
 
 
-_PROG_PTR = "CURRENT"
+def _fold_store(out_path: str):
+    from etl_spark.lake.segstore import SegmentStore
+
+    return SegmentStore(out_path, r"fold-[0-9a-f]+")
 
 
 def folded_progress_df(spark: SparkSession, out_path: str) -> DataFrame:
     """Read the folded progress table's current snapshot."""
-    import json as _json
     import os
 
-    with open(os.path.join(out_path, _PROG_PTR)) as f:
-        m = _json.loads(f.read())
+    m = _fold_store(out_path).meta()
+    if m is None:
+        raise FileNotFoundError(f"no folded progress table at {out_path}")
     return spark.read.parquet(os.path.join(out_path, m["data"]))
 
 

@@ -25,23 +25,21 @@ size — the property that makes a 10^10-event lake's derived tables
 maintainable per micro-batch. The affected-key set is one micro-batch's
 key set, so it broadcasts.
 
-Storage: the MV is itself snapshot-versioned (parquet dir per refresh +
-atomic pointer swap), recording which table version it reflects, so MV
-refresh is idempotent/resumable exactly like the main table's commits.
+Storage: the MV is itself snapshot-versioned — a ``lake/segstore.py``
+store (parquet dir per refresh + atomic pointer swap, superseded dirs
+swept one commit later so a reader of the previous snapshot keeps
+working), recording which table version it reflects, so MV refresh is
+idempotent/resumable exactly like the main table's commits.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from etl_spark.lake.table import LakeTable, _atomic_write
-
-_PTR = "CURRENT"
+from etl_spark.lake.segstore import SegmentStore
+from etl_spark.lake.table import LakeTable
 
 
 def conv_summary(state: DataFrame) -> DataFrame:
@@ -76,15 +74,11 @@ class KeyedMV:
     def __init__(self, path: str, view_fn=None):
         self.path = path
         self.view_fn = view_fn if view_fn is not None else conv_summary
-        os.makedirs(path, exist_ok=True)
+        self.store = SegmentStore(path, r"v\d+-[0-9a-f]+")
 
     # ------------------------------------------------------------- state
     def _meta(self) -> dict | None:
-        p = os.path.join(self.path, _PTR)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.loads(f.read())
+        return self.store.meta()
 
     @property
     def table_version(self) -> int | None:
@@ -99,27 +93,16 @@ class KeyedMV:
         return spark.read.parquet(os.path.join(self.path, m["data"]))
 
     def _commit(self, df: DataFrame, table_version: int) -> None:
-        import pyarrow.parquet as pq
+        # n_rows (parquet footers, no job) feeds the adaptive
+        # full-recompute cutover on the next refresh
+        self.store.replace(df, f"v{table_version}", table_version=table_version)
 
-        rel = f"v{table_version}-{uuid.uuid4().hex[:8]}"
-        out = os.path.join(self.path, rel)
-        df.write.mode("overwrite").parquet(out)
-        # row count from parquet footers (driver-side metadata, no job) —
-        # feeds the adaptive full-recompute cutover on the next refresh
-        n_rows = sum(
-            pq.read_metadata(os.path.join(out, f)).num_rows
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
-        )
-        old = self._meta()
-        _atomic_write(
-            os.path.join(self.path, _PTR),
-            json.dumps(
-                {"table_version": table_version, "data": rel, "n_rows": n_rows}
-            ),
-        )
-        if old is not None:
-            shutil.rmtree(os.path.join(self.path, old["data"]), ignore_errors=True)
+    def _advance(self, v_to: int) -> None:
+        """Pointer-only commit: the version moved with no key changes, so
+        the synced version advances without rewriting the view data."""
+        m = self._meta()
+        m["table_version"] = v_to  # keeps n_rows for the cutover
+        self.store.commit(m)
 
     def _cutover_threshold(self) -> int | None:
         """Affected-key count at which partial maintenance loses to a full
@@ -160,13 +143,7 @@ class KeyedMV:
         try:
             n_affected = affected.count()  # materializes the persist
             if n_affected == 0:
-                # nothing changed: advance the synced version without
-                # rewriting the view data (pointer-only commit)
-                meta = self._meta()
-                meta["table_version"] = v_to  # keeps n_rows for the cutover
-                _atomic_write(
-                    os.path.join(self.path, _PTR), json.dumps(meta)
-                )
+                self._advance(v_to)
                 return 0
             cut = self._cutover_threshold()
             if cut is not None and n_affected >= cut:
@@ -299,11 +276,8 @@ class ConvSummaryMV(KeyedMV):
         )
         n_affected = d.count()  # counts the checkpointed result, no recompute
         if n_affected == 0:
-            # version moved with no key changes (compaction/maintenance
-            # commits): advance the pointer without rewriting the view
-            meta = self._meta()
-            meta["table_version"] = v_to  # keeps n_rows for the cutover
-            _atomic_write(os.path.join(self.path, _PTR), json.dumps(meta))
+            # compaction/maintenance commits move the version only
+            self._advance(v_to)
             return 0
         cut = self._cutover_threshold()
         if cut is not None and n_affected >= cut:

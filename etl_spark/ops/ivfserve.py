@@ -7,9 +7,9 @@ module is the serving shape: centroid assignment happens ONCE, at ingest
 (``add``), and is PERSISTED in cell-partitioned parquet segments; a query
 assigns only its probes (a handful of rows against broadcast centroid
 literals) and reads ONLY the probed cells' files — no corpus-wide stage
-of any kind in the probe plan. Same segment-pointer durability protocol
-as ``cdc/neardup.py``: a segment becomes visible only via the atomic
-pointer swap, so a crashed ``add`` is invisible.
+of any kind in the probe plan. Segments live in a ``lake/segstore.py``
+store: a segment becomes visible only via its atomic pointer swap, so a
+crashed ``add`` is invisible.
 
 Layout::
 
@@ -41,13 +41,11 @@ join model, lifted to vector cells).
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from etl_spark.lake.table import _atomic_write
+from etl_spark.lake.segstore import SegmentStore, parquet_rows
 from etl_spark.ops.simsearch import (
     EMB_DIM,
     KMEANS_ITERS,
@@ -58,8 +56,6 @@ from etl_spark.ops.simsearch import (
     _kmeans_g_structs,
     _quantized,
 )
-
-_PTR = "CURRENT"
 
 
 def _kmeans_topn(cents: list[tuple[int, list[int], int]], n: int) -> F.Column:
@@ -76,18 +72,11 @@ class IvfIndex:
 
     def __init__(self, path: str):
         self.path = path
-        os.makedirs(path, exist_ok=True)
+        self.store = SegmentStore(path, r"(seg|compact)-.+")
 
     # ------------------------------------------------------------- state
     def _meta(self) -> dict:
-        p = os.path.join(self.path, _PTR)
-        if not os.path.exists(p):
-            return {"segments": [], "n_vecs": 0, "cents": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _commit(self, m: dict) -> None:
-        _atomic_write(os.path.join(self.path, _PTR), json.dumps(m))
+        return self.store.meta({"segments": [], "n_vecs": 0, "cents": None})
 
     @property
     def n_vecs(self) -> int:
@@ -148,7 +137,7 @@ class IvfIndex:
                 for c, s, n in cents
             ]
         m["cents"] = [[c, s, n] for c, s, n in cents]
-        self._commit(m)
+        self.store.commit(m)
         return cents
 
     # ------------------------------------------------------------ ingest
@@ -159,53 +148,35 @@ class IvfIndex:
         narrow map pass over the BATCH, no shuffle, no corpus read) and
         persist it as one cell-partitioned segment. Idempotent under a
         deterministic ``seg_name`` (redelivery finds the segment
-        committed and skips). Returns vectors added."""
-        import pyarrow.parquet as pq
-
-        from etl_spark.cdc.neardup import _absorbed_contains
-
+        committed and skips; absorbed names count too). Returns vectors
+        added."""
         cents = self.centroids()
-        seg = f"seg-{seg_name}" if seg_name else f"seg-{uuid.uuid4().hex[:12]}"
-        m = self._meta()
-        # absorbed names count: a redelivered trigger whose segment was
-        # since compacted away must still no-op (the deterministic-name
-        # ledger survives compaction — bounded tail + immutable spill,
-        # see ``compact`` and neardup's shared absorbed-ledger helpers)
-        if seg in m["segments"] or _absorbed_contains(self.path, m, seg):
-            return 0
-        seg_dir = os.path.join(self.path, seg)
-        rows = (
-            _quantized(emb)
-            .withColumn("cluster", _kmeans_assign(cents))
-            .select(
-                F.col("vec_id"),
-                F.col("cluster"),
-                # `cell` duplicates the partition value INSIDE the file so
-                # probed-cell reads need no basePath partition discovery
-                F.col("cluster").alias("cell"),
-                F.col("__q").alias("q"),
-                F.col("__nsq").alias("nsq"),
+
+        def write(seg_dir: str) -> int:
+            (
+                _quantized(emb)
+                .withColumn("cluster", _kmeans_assign(cents))
+                .select(
+                    F.col("vec_id"),
+                    F.col("cluster"),
+                    # `cell` duplicates the partition value INSIDE the file
+                    # so probed-cell reads need no basePath discovery
+                    F.col("cluster").alias("cell"),
+                    F.col("__q").alias("q"),
+                    F.col("__nsq").alias("nsq"),
+                )
+                .write.mode("overwrite")
+                .partitionBy("cluster")
+                .parquet(seg_dir)
             )
-        )
-        rows.write.mode("overwrite").partitionBy("cluster").parquet(seg_dir)
-        n = 0
-        for root, _dirs, files in os.walk(seg_dir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    n += pq.read_metadata(os.path.join(root, fn)).num_rows
-        m = self._meta()
-        m["segments"].append(seg)
-        m["n_vecs"] += n
-        self._commit(m)
-        return n
+            return parquet_rows(seg_dir)
+
+        seg = f"seg-{seg_name}" if seg_name else self.store.new_name("seg")
+        return self.store.append(self._meta(), seg, write, "n_vecs")
 
     # ------------------------------------------------------- maintenance
     def compact(
-        self,
-        spark: SparkSession,
-        min_segments: int = 2,
-        keep_last: int = 0,
-        remove_absorbed: bool = True,
+        self, spark: SparkSession, min_segments: int = 2, keep_last: int = 0
     ) -> dict | None:
         """Merge committed segments into ONE consolidated cell-partitioned
         segment behind the atomic pointer swap (the index analog of the
@@ -221,79 +192,31 @@ class IvfIndex:
         cell writes it).
 
         The deterministic segment-name ledger survives in ``absorbed``
-        (redelivered ``add``s still no-op). ``remove_absorbed`` deletes
-        merged dirs after the swap — single writer, no in-flight probe
-        plans older than the swap (run between triggers; pass False to
-        sweep later). ``keep_last`` mirrors the neardup gate's contract
-        but defaults to 0 here: the IVF probe has no own-segment
-        exclusion, so absorbing every segment is safe.
+        (redelivered ``add``s still no-op); absorbed dirs are retired and
+        swept by the next commit (lake/segstore.py), so probe plans built
+        before the swap keep working until then. ``keep_last`` mirrors
+        the neardup gate's contract but defaults to 0 here: the IVF probe
+        has no own-segment exclusion, so absorbing every segment is safe.
 
         Returns {"absorbed": n, "segments": n_after, "files_before": n,
         "files_after": n} or None when below ``min_segments``."""
-        import shutil
 
-        from etl_spark.cdc.neardup import _merge_absorbed
+        def rewrite(src: list[str], out: str) -> None:
+            # recursiveFileLookup skips partition discovery (multiple
+            # roots conflict); the in-file ``cell`` duplicate is the
+            # cluster id
+            (
+                spark.read.option("recursiveFileLookup", "true")
+                .parquet(*src)
+                .withColumn("cluster", F.col("cell"))
+                .repartition("cluster")
+                .select("vec_id", "cluster", "cell", "q", "nsq")
+                .write.mode("overwrite")
+                .partitionBy("cluster")
+                .parquet(out)
+            )
 
-        m = self._meta()
-        live = list(m["segments"])
-        absorbable = live[: max(0, len(live) - keep_last)]
-        if len(absorbable) < min_segments:
-            return None
-        # sweep orphans from crashed earlier compactions (single-writer
-        # contract: any seg-/compact- dir the pointer doesn't reference
-        # is dead — a crashed write or an interrupted post-swap removal)
-        for d in os.listdir(self.path):
-            if (
-                (d.startswith("seg-") or d.startswith("compact-"))
-                and d not in live
-                and os.path.isdir(os.path.join(self.path, d))
-            ):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        comp = f"compact-{uuid.uuid4().hex[:12]}"
-        comp_dir = os.path.join(self.path, comp)
-
-        def _count_files(dirs: list[str]) -> int:
-            n = 0
-            for d in dirs:
-                for _root, _sub, files in os.walk(d):
-                    n += sum(1 for f in files if f.endswith(".parquet"))
-            return n
-
-        files_before = _count_files(
-            [os.path.join(self.path, s) for s in absorbable]
-        )
-        # recursiveFileLookup skips partition discovery (multiple roots
-        # conflict); the in-file ``cell`` duplicate is the cluster id
-        (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(*[os.path.join(self.path, s) for s in absorbable])
-            .withColumn("cluster", F.col("cell"))
-            .repartition("cluster")
-            .select("vec_id", "cluster", "cell", "q", "nsq")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(comp_dir)
-        )
-        m2 = self._meta()
-        old_spill = _merge_absorbed(self.path, m2, absorbable)
-        m2["segments"] = [comp] + [
-            s for s in m2["segments"] if s not in set(absorbable)
-        ]
-        self._commit(m2)
-        if old_spill:
-            try:
-                os.remove(os.path.join(self.path, old_spill))
-            except OSError:
-                pass
-        if remove_absorbed:
-            for s in absorbable:
-                shutil.rmtree(os.path.join(self.path, s), ignore_errors=True)
-        return {
-            "absorbed": len(absorbable),
-            "segments": len(m2["segments"]),
-            "files_before": files_before,
-            "files_after": _count_files([comp_dir]),
-        }
+        return self.store.compact(rewrite, keep_last, min_segments)
 
     # ------------------------------------------------------------- probe
     def plan_cells(self, cells: list[int]) -> list[str]:

@@ -1078,9 +1078,9 @@ def doc_neardup_gate_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``NearDupIndex.compact`` is a pure file merge: the per-round dup
     pairs (and hence the union the oracle checks) are identical to the
     uncompacted run. Earlier rounds' results are materialized before
-    compacting because compaction removes the absorbed segment files a
-    lazy plan would still reference (the documented single-writer /
-    no-stale-reader contract)."""
+    compacting because the commit after a compaction sweeps the absorbed
+    segment files a lazy plan would still reference (the segment store
+    keeps superseded files for one pointer generation only)."""
     import atexit
     import shutil
     import tempfile

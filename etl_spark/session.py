@@ -132,6 +132,15 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # The streaming file source probes its glob path (<feed>/*) for a sink
+    # metadata dir and logs a WARN plus a stack trace on every query start
+    # when there is none — the normal case for a producer-written feed.
+    # Silence that one logger; every other WARN stays.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

@@ -46,17 +46,19 @@ def _pairs(df):
     )
 
 
-def _seg_files(path):
+def _live_files(idx):
+    """Parquet files under the live pointer's segments — what probes read."""
     n = 0
-    for root, _d, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
+    for s in idx._meta()["segments"]:
+        for _root, _d, files in os.walk(os.path.join(idx.path, s)):
+            n += sum(1 for f in files if f.endswith(".parquet"))
     return n
 
 
 def test_neardup_compact_preserves_probe_results(spark, tmpdir_path):
     """Compaction is a pure file merge: find_dups over the compacted index
-    returns byte-identical pairs, n_docs is preserved, and the file count
-    collapses."""
+    returns byte-identical pairs, n_docs is preserved, and the probed file
+    count collapses; the absorbed dirs are swept by the next commit."""
     p = os.path.join(tmpdir_path, "ndi")
     idx = NearDupIndex(p)
     for rows in (BASE, B2, B3):
@@ -64,15 +66,18 @@ def test_neardup_compact_preserves_probe_results(spark, tmpdir_path):
     assert len(idx._meta()["segments"]) == 3
     before = _pairs(idx.find_dups(spark, _df(spark, PROBE)))
     assert {d for d, _, _ in before} >= {30, 31}  # probes hit the corpus
-    n_docs, files0 = idx.n_docs, _seg_files(p)
+    n_docs, files0 = idx.n_docs, _live_files(idx)
+    absorbed = list(idx._meta()["segments"])
 
     out = idx.compact(spark, keep_last=0)
     assert out is not None and out["absorbed"] == 3 and out["segments"] == 1
     assert idx.n_docs == n_docs
     assert _pairs(idx.find_dups(spark, _df(spark, PROBE))) == before
-    assert _seg_files(p) < files0
+    assert _live_files(idx) < files0
     # re-compacting a single segment is a no-op (below min_segments)
     assert idx.compact(spark, keep_last=0) is None
+    idx.add(spark, _df(spark, [(99, "one more document admitted after compaction")]))
+    assert not any(os.path.exists(os.path.join(p, s)) for s in absorbed)
 
 
 def test_gate_idempotence_survives_compaction(spark, tmpdir_path):
@@ -200,36 +205,15 @@ def test_stream_gate_compaction_bounds_segments(spark, tmpdir_path):
     assert outs["on"] == outs["off"]
 
 
-def test_compact_keep_last_clamps_and_orphan_sweep(spark, tmpdir_path):
-    """keep_last larger than the live segment count must absorb NOTHING
-    (no negative-slice wraparound), and a compaction sweeps orphan dirs
-    left by crashed earlier compactions (round-5 self-review)."""
-    p = os.path.join(tmpdir_path, "ndk")
-    idx = NearDupIndex(p)
-    idx.gate_and_admit(spark, _df(spark, BASE), "k1").count()
-    idx.gate_and_admit(spark, _df(spark, B2), "k2").count()
-    # keep_last=3 > 2 live segments: nothing is absorbable
-    assert idx.compact(spark, min_segments=1, keep_last=3) is None
-    assert len(idx._meta()["segments"]) == 2
-
-    # crashed-compaction orphan (dir exists, pointer never referenced it)
-    os.makedirs(os.path.join(p, "compact-deadbeef", "sig"))
-    os.makedirs(os.path.join(p, "seg-crashedwrite", "sig"))
-    out = idx.compact(spark, min_segments=1, keep_last=1)
-    assert out is not None
-    assert not os.path.isdir(os.path.join(p, "compact-deadbeef"))
-    assert not os.path.isdir(os.path.join(p, "seg-crashedwrite"))
-
-
 def test_absorbed_ledger_spills_and_membership_survives(spark, tmpdir_path, monkeypatch):
     """The absorbed-name ledger must stay bounded in the pointer (inline
     tail + immutable cumulative spill) while preserving redelivery
     no-ops for names absorbed many compactions ago."""
     import json
 
-    from etl_spark.cdc import neardup as nd
+    from etl_spark.lake import segstore
 
-    monkeypatch.setattr(nd, "ABSORBED_INLINE_MAX", 3)
+    monkeypatch.setattr(segstore, "ABSORBED_INLINE_MAX", 3)
     p = os.path.join(tmpdir_path, "nds")
     idx = NearDupIndex(p)
     rows = [[(100 * k + i, f"{t} spill round {k}") for i, t in

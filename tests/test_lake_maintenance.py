@@ -166,13 +166,16 @@ def test_stream_default_bounds_files_without_operator(spark, tmpdir_path):
 
     feed_dir = os.path.join(tmpdir_path, "feed")
     # many small segments, each touching most buckets of a tiny table —
-    # unbounded MOR appends would pile ~n_batches files per bucket
+    # unbounded MOR appends would pile one file per bucket per trigger:
+    # 24 segments x 2 files at maxFilesPerTrigger=1 is 48 triggers, so
+    # the default policy must fire more than once to hold the bound
     write_feed(
         change_feed_df(
             spark, n_events=6000, n_convs=40, max_turns=8, seed=33,
             n_batches=24,
         ),
         feed_dir,
+        files_per_segment=2,
     )
     t = LakeTable.create(
         os.path.join(tmpdir_path, "lake"), TRANSCRIPT_SCHEMA, n_buckets=4

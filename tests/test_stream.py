@@ -80,6 +80,23 @@ def test_batch_replay_after_stream_noops(spark, tmpdir_path):
     assert t.manifest().version == v
 
 
+def test_stream_after_batch_replay_noops(spark, tmpdir_path):
+    """The reverse order: segments ledgered by a batch REPLAY must satisfy
+    the stream's segment-immutability check (no false SegmentReuseError
+    on an untouched parquet segment) and no-op on a fresh checkpoint."""
+    from etl_spark.cdc.apply import replay_feed
+
+    feed_dir = os.path.join(tmpdir_path, "feed")
+    write_feed(change_feed_df(spark, **GEN), feed_dir)
+    t = LakeTable.create(os.path.join(tmpdir_path, "lake"), TRANSCRIPT_SCHEMA, n_buckets=8)
+    replay_feed(spark, t, feed_dir, mode="mor")
+    v = t.manifest().version
+    run_stream(spark, t, feed_dir, os.path.join(tmpdir_path, "ckpt"),
+               max_files_per_trigger=4, mode="mor", available_now=True)
+    assert t.manifest().version == v
+    _assert_state_equal(table_as_pandas(t.read(spark)), expected_final_state(feed_dir))
+
+
 def test_segment_name_reuse_refused(spark, tmpdir_path):
     """Two different feeds whose segment names collide: the second replay
     must REFUSE (SegmentReuseError), never silently skip the new data —
@@ -119,7 +136,7 @@ def test_progress_telemetry_one_row_per_trigger(spark, tmpdir_path):
     write_feed(
         change_feed_df(spark, n_events=6000, n_convs=80, max_turns=8,
                        seed=91, n_batches=3),
-        feed,
+        feed, files_per_segment=2,
     )
     table = LakeTable.create(
         os.path.join(tmpdir_path, "plake"), TRANSCRIPT_SCHEMA, n_buckets=4
@@ -361,7 +378,7 @@ def test_progress_fold_into_snapshot_table(spark, tmpdir_path):
     write_feed(
         change_feed_df(spark, n_events=4000, n_convs=60, max_turns=8,
                        seed=51, n_batches=3),
-        feed,
+        feed, files_per_segment=2,
     )
     t = LakeTable.create(
         os.path.join(tmpdir_path, "flake"), TRANSCRIPT_SCHEMA, n_buckets=4

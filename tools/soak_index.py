@@ -14,8 +14,11 @@ Usage:
       [--no-compact] [--out SOAK_INDEX.json]
 
 Emits one JSON line (and writes --out): per-decile median gate wall,
-live-segment count and probe-file count over time, compaction walls, and
-the flatness verdict (last-decile wall / steady-state wall).
+live-segment count and probe-file count over time, compaction walls, the
+index directory's on-disk bytes and dir count right after each
+compaction (live segments plus the one retired generation the store
+keeps until its next commit), and the flatness verdict (last-decile
+wall / steady-state wall).
 """
 
 from __future__ import annotations
@@ -59,6 +62,17 @@ def _probe_files(idx) -> int:
     return n
 
 
+def _disk(path: str) -> dict:
+    """On-disk footprint of the index directory: bytes and top-level dirs."""
+    nbytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _sub, files in os.walk(path)
+        for f in files
+    )
+    ndirs = sum(os.path.isdir(os.path.join(path, e)) for e in os.listdir(path))
+    return {"bytes": nbytes, "dirs": ndirs}
+
+
 def _med(xs):
     xs = sorted(xs)
     return xs[len(xs) // 2] if xs else 0.0
@@ -92,6 +106,7 @@ def main() -> None:
     idx = NearDupIndex(os.path.join(work, "ndi"), n_minhash=16, hash_fn="xxh64")
     walls: list[float] = []
     compact_walls: list[float] = []
+    compact_disk: list[dict] = []
     track: list[dict] = []
     dups_total = 0
     t_all = time.time()
@@ -108,6 +123,7 @@ def main() -> None:
                 t0 = time.time()
                 idx.compact(spark)
                 compact_walls.append(time.time() - t0)
+                compact_disk.append({"trigger": k + 1, **_disk(idx.path)})
             if (k + 1) % max(1, args.triggers // 20) == 0:
                 track.append(
                     {
@@ -138,6 +154,8 @@ def main() -> None:
             "steady_med_wall_sec": round(steady, 3),
             "last_decile_over_steady": round(deciles[-1] / max(steady, 1e-9), 3),
             "compact_walls_sec": [round(w, 2) for w in compact_walls],
+            "compact_disk": compact_disk,
+            "disk_final": _disk(idx.path),
             "live_segments_final": len(idx._meta()["segments"]),
             "absorbed_final": len(idx._meta().get("absorbed", [])),
             "probe_files_final": _probe_files(idx),
