@@ -113,7 +113,8 @@ def new_files_predicate(
     it. A one-sided normalization silently drops such a file's rows
     while the ledger marks it applied (the round-4 review's '+' case);
     the symmetric variant set matches whichever encoding each side
-    chose. Shared by run_stream and route_stream — one copy to fix.
+    chose. Called once, from the streaming trigger core that run_stream
+    and route_stream share (``cdc/stream._resolve_trigger``).
 
     The variant union can OVER-match when form decoding collides two
     distinct sibling files ('a+b.parquet' form-decodes to the same
@@ -164,8 +165,9 @@ def new_files_predicate(
 
 def segment_listing(feed_dir: str, sname: str) -> set[str]:
     """Current on-disk parquet file set of a feed segment, in the decoded
-    segment-relative identity used for fingerprints. Shared by the
-    streaming drivers' completion bookkeeping."""
+    segment-relative identity used for fingerprints. Used by the
+    streaming trigger core's completion bookkeeping and the immutability
+    check."""
     from urllib.parse import unquote
 
     d = os.path.join(feed_dir, unquote(sname))
@@ -208,9 +210,8 @@ def check_segment_immutability(
     ALWAYS equals the listing fingerprint, so the legacy probe would
     silently skip every mutated common-case segment.)
 
-    Shared by ``run_stream`` and ``route_stream`` (one copy to fix —
-    the round-4 review found run_stream silently dropping appended
-    files its sibling had learned to refuse)."""
+    Called once, from the streaming trigger core that ``run_stream`` and
+    ``route_stream`` share (``cdc/stream._trigger_bookkeeping``)."""
     for sname in sorted(set(seg_names)):
         cur_fp: str | None = None
         listed = False

@@ -32,9 +32,28 @@ driver dispatch costs only driver latency, not executor idle time.
 
 from __future__ import annotations
 
+import os
+import time
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from etl_spark.cdc.apply import MergeStats, apply_batch
+from etl_spark.cdc.apply import (
+    MergeStats,
+    SegmentReuseError,
+    _segment_relative,
+    apply_batch,
+    batch_fingerprint,
+    feed_files_nonempty,
+)
+from etl_spark.cdc.stream import (
+    _drain,
+    _feed_source,
+    _progress_rows_recorded,
+    _record_progress,
+    _resolve_trigger,
+)
+from etl_spark.lake.catalog import TableNotFoundError
+from etl_spark.lake.merge import _require_expected_rows
 
 ROUTE_COL = "tbl"
 
@@ -58,6 +77,7 @@ def route_batch(
     segments: dict[str, str] | None = None,
     ensure: list[str] | None = None,
     segments_cover_batch: bool = False,
+    expect_rows=False,  # bool or () -> bool (zero-row path only)
     **apply_kwargs,
 ) -> dict[str, MergeStats]:
     """Apply one interleaved micro-batch to every table it names.
@@ -68,7 +88,9 @@ def route_batch(
     ``apply_batch``). ``on_unknown='skip'`` drops unknown-table slices
     and reports them under the pseudo-key ``'!unknown'`` with a row count
     in ``events_in`` — for feeds that legitimately carry tables this
-    consumer does not own (Debezium topic-include-list analog).
+    consumer does not own (Debezium topic-include-list analog). A NULL
+    or empty route value names no table: it is unknown too (reported
+    as ``''``), never dropped uncounted.
 
     ``include``: explicit ownership list — a route value that names an
     EXISTING catalog table outside it is still treated by the
@@ -89,12 +111,14 @@ def route_batch(
     ``ensure``: idents to apply even when the batch carries no rows for
     them — the empty slice commits a counters-only version that still
     records ``segments``/``input_files``, so every owned table's ledger
-    advances in lockstep (the streaming redelivery check needs this)."""
+    advances in lockstep (the streaming redelivery check needs this).
+
+    ``expect_rows``: the zero-row guard, same bool-or-callable contract
+    as ``apply_batch``, checked ONCE for the whole batch on the route
+    probe below (before any apply) instead of per slice — an owned
+    slice may legitimately be empty under ``ensure``."""
     if table_col not in batch.columns:
         raise ValueError(f"route column {table_col!r} not in batch")
-    from etl_spark.cdc.apply import SegmentReuseError
-    from etl_spark.lake.catalog import TableNotFoundError
-
     # one source scan for all slices: cache the (micro-batch-sized) input
     # BEFORE the distinct probe, so the probe materializes the cache and
     # every per-table filter reads memory, not the source
@@ -102,13 +126,13 @@ def route_batch(
     out: dict[str, MergeStats] = {}
     try:
         # bounded collect: distinct route values = number of tables in the
-        # segment (tens), never the row count
-        idents = sorted(
-            {r[0] for r in cached.select(table_col).distinct().collect() if r[0]}
-            | set(ensure or [])
-        )
+        # segment (tens), never the row count; NULL and '' both map to ''
+        routed = {r[0] or "" for r in cached.select(table_col).distinct().collect()}
+        # no route values = no rows: the zero-row guard rides this probe
+        _require_expected_rows(batch_id, len(routed), expect_rows)
+        idents = sorted((routed - {""}) | set(ensure or []))
         tables = {}
-        unknown: list[str] = []
+        unknown: list[str] = [""] if "" in routed else []
         for ident in idents:
             if include is not None and ident not in include:
                 unknown.append(ident)
@@ -168,7 +192,7 @@ def route_batch(
         if unknown:
             skipped = MergeStats(batch_id=batch_id)
             skipped.events_in = cached.filter(
-                F.col(table_col).isin(*unknown)
+                F.col(table_col).isNull() | F.col(table_col).isin(*unknown)
             ).count()
             out["!unknown"] = skipped
     finally:
@@ -196,10 +220,6 @@ def replay_feed_routed(
     a later ``route_stream`` tail of the same directory recognizes the
     replayed files as applied, and a reused segment name with different
     content is refused (``SegmentReuseError``), same as ``replay_feed``."""
-    import os
-
-    from etl_spark.cdc.apply import _segment_relative, batch_fingerprint
-
     out: dict[str, dict[str, MergeStats]] = {}
     for seg in sorted(os.listdir(feed_dir)):
         d = os.path.join(feed_dir, seg)
@@ -247,132 +267,61 @@ def route_stream(
     behind its real owner's back; a typo'd value fails fast under
     ``on_unknown='fail'``.
 
-    Exactly-once composition under redelivery: the trigger's batch id is
-    the fingerprint of its input files (NOT Spark's epoch id), and every
-    owned table — including ones with zero rows in the trigger, via
-    ``ensure`` — records the same ``input_files`` in its own commit
-    ledger, so the ledgers advance in lockstep. After checkpoint loss the
-    re-delivered files are recognized as applied only when EVERY routed
-    table has them — a crash between table A's commit and table B's
-    (non-transactional mode) re-runs the trigger, A skips idempotently,
-    B applies; with ``transactional=True`` the per-trigger pin swap makes
-    even the intermediate state invisible to catalog readers. Completed
-    segments collapse into the compact per-segment fingerprint map
-    (pruning per-file ledger entries), and a reused segment name with
-    different content raises ``SegmentReuseError`` instead of being
-    silently skipped or double-applied.
+    Exactly-once composition under redelivery is the trigger core shared
+    with ``run_stream`` (``cdc/stream._resolve_trigger``): the batch id is
+    the fingerprint of the trigger's new input files (NOT Spark's epoch
+    id), every owned table — including ones with zero rows in the
+    trigger, via ``ensure`` — records the same ``input_files``, and a
+    file counts as applied only when EVERY owned table has it. A crash
+    between table A's commit and table B's (non-transactional mode)
+    re-runs the trigger, A skips idempotently, B applies; with
+    ``transactional=True`` the per-trigger pin swap makes even the
+    intermediate state invisible to catalog readers.
+
+    One progress row per trigger goes to ``<checkpoint_dir>/_progress``
+    (``stream.progress_df``), counters summed over the owned tables.
+    Returns the StreamingQuery (drained when ``available_now``).
     """
-    from pyspark.sql import functions as _F
-
-    from etl_spark.cdc.apply import _segment_relative, batch_fingerprint
-    from etl_spark.cdc.stream import detect_feed_schema
-
-    tables = {i: catalog.load_table(i) for i in idents}
-    schema = detect_feed_schema(spark, feed_dir)
-    if table_col not in schema.fieldNames():
+    tables = [catalog.load_table(i) for i in idents]
+    src = _feed_source(spark, feed_dir, max_files_per_trigger)
+    if table_col not in src.columns:
         raise ValueError(f"feed lacks the route column {table_col!r}")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(f"{feed_dir}/*").withColumn(
-        "__file", _F.input_file_name()
-    )
-
-    from urllib.parse import unquote
-
-    from etl_spark.cdc.apply import (
-        check_segment_immutability,
-        feed_files_nonempty,
-        new_files_predicate,
-        segment_listing,
-    )
-
-    def _segment_listing(sname: str) -> set[str]:
-        return segment_listing(feed_dir, sname)
+    prog_dir = os.path.join(checkpoint_dir, "_progress")
+    trigger_no = [_progress_rows_recorded(prog_dir)]
 
     def _apply(df: DataFrame, epoch_id: int) -> None:
-        files = list(df.inputFiles())
-        if not files:
-            files = [r[0] for r in df.select("__file").distinct().collect()]
-        if not files:
-            return
-        done = [
-            (t, t.committed_segments(), t.committed_inputs())
-            for t in tables.values()
-        ]
-
-        # A segment ledgered complete is immutable by contract: refuse a
-        # file appended to one (shared helper, with the legacy batch-id
-        # fallback — see check_segment_immutability). Reuses the ledger
-        # snapshots materialized above: no extra manifest I/O per table.
-        trigger_segs = sorted({_segment_relative(f).split("/")[0] for f in files})
-        check_segment_immutability(
-            feed_dir, trigger_segs, [(t, segs) for t, segs, _inps in done]
+        t0 = time.time()
+        trig = _resolve_trigger(df, feed_dir, tables)
+        s = None
+        if trig is not None:
+            bid, rel_new, complete, batch_df = trig
+            s = _trigger_stats(bid, route_batch(
+                spark, catalog, batch_df, bid, table_col=table_col,
+                transactional=transactional, on_unknown=on_unknown, mode=mode,
+                include=list(idents), ensure=list(idents),
+                segments=complete or None, input_files=rel_new,
+                # zero rows for new files: fail loudly pre-commit, unless
+                # the files are genuinely empty parquet (footer probe) —
+                # then every owned table ledgers them counters-only
+                expect_rows=lambda: feed_files_nonempty(feed_dir, rel_new),
+                **apply_kwargs,
+            ))
+        _record_progress(
+            spark, prog_dir, trigger_no[0], int(epoch_id), s,
+            time.time() - t0, t0,
         )
+        trigger_no[0] += 1
 
-        def applied_everywhere(f: str) -> bool:
-            rel = _segment_relative(f)
-            seg = rel.split("/")[0]
-            return all(seg in segs or rel in inps for _t, segs, inps in done)
+    return _drain(src, checkpoint_dir, available_now, _apply)
 
-        new_files = sorted(f for f in files if not applied_everywhere(f))
-        if not new_files:
-            return
-        bid = batch_fingerprint(new_files)
-        rel_new = [_segment_relative(f) for f in new_files]
-        # segment completion (run_stream's bookkeeping, against the LEAST
-        # advanced ledger): once every file of a segment is applied in all
-        # routed tables, the segment moves to the compact per-segment
-        # fingerprint map and its per-file entries are pruned — bounding
-        # ledger growth over an endless stream
-        common_inputs = (
-            set.intersection(*(inps for _t, _segs, inps in done))
-            if done
-            else set()
-        )
-        applied_decoded = {unquote(x) for x in (common_inputs | set(rel_new))}
-        complete: dict[str, str] = {}
-        for sname in sorted({r.split("/")[0] for r in rel_new}):
-            allf = _segment_listing(sname)
-            if allf and allf <= applied_decoded:
-                complete[sname] = batch_fingerprint(sorted(allf))
-        # symmetric normalized identity matching (shared helper — see
-        # cdc/apply.new_files_predicate for the encoding-drift contract);
-        # already-applied sibling files are excluded so a form-decode
-        # collision cannot re-admit their rows
-        new_set = set(new_files)
-        rel_applied = [_segment_relative(f) for f in files if f not in new_set]
-        batch_df = df.filter(
-            new_files_predicate(rel_new, feed_dir=feed_dir, rel_applied=rel_applied)
-        ).drop("__file")
-        if batch_df.isEmpty() and not df.isEmpty():
-            # rows exist in the trigger but none matched the new files —
-            # either the identity normalization above missed (fail loudly
-            # instead of ledgering unapplied files), or the new files are
-            # legitimately EMPTY parquet (an empty producer partition —
-            # footer-probed driver-side, only on this already-failed
-            # path); the latter proceeds to ledger them as applied with
-            # a counters-only commit per routed table.
-            if feed_files_nonempty(feed_dir, rel_new):
-                raise RuntimeError(
-                    f"route_stream: trigger matched 0 rows for "
-                    f"{len(rel_new)} new files ({rel_new[:3]}…) — "
-                    f"file-identity normalization mismatch between "
-                    f"inputFiles() and input_file_name()"
-                )
-        route_batch(
-            spark, catalog, batch_df, bid, table_col=table_col,
-            transactional=transactional, on_unknown=on_unknown, mode=mode,
-            include=list(idents), ensure=list(idents),
-            segments=complete or None, input_files=rel_new,
-            **apply_kwargs,
-        )
 
-    writer = src.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
+def _trigger_stats(bid: str, out: dict[str, MergeStats]) -> MergeStats:
+    """One progress row's counters: the owned tables' MergeStats summed
+    (``'!unknown'`` left out, so ``events_in == applied + failed + late
+    + dup`` holds); skipped only when every slice skipped."""
+    owned = [st for k, st in out.items() if k != "!unknown"]
+    s = MergeStats(bid, skipped_idempotent=all(st.skipped_idempotent for st in owned))
+    for f in ("events_in", "inserted", "updated", "deleted",
+              "stale_skipped", "failed", "late_dropped", "dup_dropped"):
+        setattr(s, f, sum(getattr(st, f) for st in owned))
+    return s

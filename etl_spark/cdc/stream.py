@@ -34,6 +34,9 @@ mirrors the reference's out-of-band update-schema deploy step
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_spark.cdc.apply import (
@@ -173,10 +176,8 @@ def _progress_rows_recorded(prog_dir: str) -> int:
     """Rows already in a progress file — a resumed stream continues the
     trigger numbering instead of restarting at 0 (the file is append-only
     across restarts of the same checkpoint)."""
-    import os as _os
-
     try:
-        with open(_os.path.join(prog_dir, "progress.jsonl")) as f:
+        with open(os.path.join(prog_dir, "progress.jsonl")) as f:
             return sum(1 for _ in f)
     except OSError:
         return 0
@@ -201,7 +202,6 @@ def _record_progress(
     with the explicit schema."""
     import datetime as _dt
     import json as _json
-    import os as _os
 
     if stats is None:
         row = dict(trigger_no=trigger_no, epoch_id=epoch_id, batch_id=None,
@@ -227,8 +227,8 @@ def _record_progress(
     if mv_stats is not None:
         row["mv_arith"] = int(mv_stats["n_arith"])
         row["mv_reagg"] = int(mv_stats["n_reagg"])
-    _os.makedirs(prog_dir, exist_ok=True)
-    with open(_os.path.join(prog_dir, "progress.jsonl"), "a") as f:
+    os.makedirs(prog_dir, exist_ok=True)
+    with open(os.path.join(prog_dir, "progress.jsonl"), "a") as f:
         f.write(_json.dumps(row) + "\n")
 
 
@@ -292,12 +292,141 @@ def _fold_store(out_path: str):
 
 def folded_progress_df(spark: SparkSession, out_path: str) -> DataFrame:
     """Read the folded progress table's current snapshot."""
-    import os
-
     m = _fold_store(out_path).meta()
     if m is None:
         raise FileNotFoundError(f"no folded progress table at {out_path}")
     return spark.read.parquet(os.path.join(out_path, m["data"]))
+
+
+# --- streaming trigger core: one copy, shared by run_stream and route_stream --
+#
+# Idempotence is per INPUT FILE: maxFilesPerTrigger can split one segment's
+# files across triggers, so marking a whole segment done on its first
+# partial delivery would silently drop the rest (the round-1 bug, masked by
+# a feed writer that happened to emit fewer files per segment than the
+# trigger size). After checkpoint loss, Spark re-delivers old files grouped
+# differently — the per-file ledger no-ops them regardless of grouping. A
+# segment moves to the compact per-segment map (and its file entries are
+# pruned) only once EVERY file in its directory has been applied. Segments
+# are immutable by contract (like the reference's archives). A single-table
+# stream is the one-ledger case of the multi-table one.
+
+
+def _feed_source(
+    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """Schema-pinned streaming parquet source over the feed's segment
+    dirs, with each row's ``__file`` (``input_file_name()``)."""
+    reader = spark.readStream.schema(detect_feed_schema(spark, feed_dir))
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(f"{feed_dir}/*").withColumn("__file", F.input_file_name())
+
+
+def _trigger_bookkeeping(
+    feed_dir: str,
+    files: list[str],
+    ledgers: list[tuple[LakeTable, dict[str, str], set[str]]],
+) -> tuple[str, list[str], list[str], dict[str, str]] | None:
+    """Spark-free ledger arithmetic of one trigger: ``files`` (the
+    trigger's input files) against one ``(table, committed_segments(),
+    committed_inputs())`` snapshot per sink table → ``(bid, rel_new,
+    rel_applied, complete_segs)``, or None when every file is applied.
+
+    A file is new unless EVERY ledger holds it (its segment completed
+    there, or the file itself is ledgered): a crash between table A's
+    commit and table B's re-runs the trigger for B. A segment completes
+    only when its whole on-disk listing is applied in every ledger — a
+    ledger that already completed it counts as holding all its files.
+    The table of each snapshot is consulted only by the immutability
+    check's legacy probe, on a fingerprint mismatch."""
+
+    def seg(rel: str) -> str:
+        return rel.split("/")[0]
+
+    rels = {f: _segment_relative(f) for f in files}
+    # refuse a file appended to a COMPLETED segment before the
+    # name-membership skip below can silently drop it (listing vs
+    # completion fingerprint, with the legacy batch-id fallback)
+    check_segment_immutability(
+        feed_dir, [seg(r) for r in rels.values()],
+        [(t, segs) for t, segs, _inps in ledgers],
+    )
+    new_files = sorted(
+        f for f, r in rels.items()
+        if not all(seg(r) in segs or r in inps for _t, segs, inps in ledgers)
+    )
+    if not new_files:
+        return None
+    rel_new = [rels[f] for f in new_files]
+    # the ledger stores URI-style names (input_file_name/inputFiles may
+    # percent-encode); the directory listing is raw — decode the ledger
+    # side for the completion comparison or a file with an encodable
+    # character in its name would keep its segment "incomplete" forever
+    applied_decoded = [
+        {unquote(x) for x in inps | set(rel_new)} for _t, _segs, inps in ledgers
+    ]
+    # a COMPLETED segment is ledgered under its content fingerprint (all
+    # its files), so a later batch replay of the same feed proves
+    # same-name-same-content and skips — while a reused segment name with
+    # different content is refused instead of silently dropped
+    complete_segs: dict[str, str] = {}
+    for sname in sorted({seg(r) for r in rel_new}):
+        allf = segment_listing(feed_dir, sname)
+        if allf and all(
+            sname in segs or allf <= dec
+            for (_t, segs, _inps), dec in zip(ledgers, applied_decoded)
+        ):
+            complete_segs[sname] = batch_fingerprint(sorted(allf))
+    new_set = set(new_files)
+    rel_applied = [r for f, r in rels.items() if f not in new_set]
+    return batch_fingerprint(new_files), rel_new, rel_applied, complete_segs
+
+
+def _resolve_trigger(
+    df: DataFrame, feed_dir: str, tables: list[LakeTable]
+) -> tuple[str, list[str], dict[str, str], DataFrame] | None:
+    """Resolve one micro-batch of ``_feed_source`` against the sink
+    tables' ledgers → ``(bid, rel_new, complete_segs, batch_df)``, or
+    None when nothing is new. ``bid`` is the fingerprint of the new
+    input files (NOT Spark's epoch id, which changes on redelivery);
+    ``batch_df`` holds exactly the new files' rows, ``__file`` dropped."""
+    # inputFiles() is plan metadata (no job), but a micro-batch of the
+    # streaming file source returns no files from it under Spark 4.1, so
+    # the fallback scan + distinct (2 jobs under AQE) runs every trigger
+    files = list(df.inputFiles())
+    if not files:
+        files = [r[0] for r in df.select("__file").distinct().collect()]
+    if not files:
+        return None
+    trig = _trigger_bookkeeping(
+        feed_dir, files,
+        [(t, t.committed_segments(), t.committed_inputs()) for t in tables],
+    )
+    if trig is None:
+        return None
+    bid, rel_new, rel_applied, complete_segs = trig
+    # symmetric normalized identity matching (see new_files_predicate for
+    # the encoding-drift contract); already-applied sibling files are
+    # excluded so a form-decode collision cannot re-admit their rows
+    batch_df = df.filter(
+        new_files_predicate(rel_new, feed_dir=feed_dir, rel_applied=rel_applied)
+    ).drop("__file")
+    return bid, rel_new, complete_segs, batch_df
+
+
+def _drain(src: DataFrame, checkpoint_dir: str, available_now: bool, on_batch):
+    """Run ``on_batch(df, epoch_id)`` per micro-batch of ``src`` under the
+    checkpoint: drained to completion (availableNow) or left running.
+    Returns the StreamingQuery either way."""
+    writer = src.writeStream.foreachBatch(on_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def run_stream(
@@ -386,17 +515,11 @@ def run_stream(
     append halved drain throughput). An availableNow drain ends with a
     final fold so the table is current. None (default) opts out at zero
     drain cost."""
-    schema = detect_feed_schema(spark, feed_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(f"{feed_dir}/*").withColumn("__file", F.input_file_name())
+    src = _feed_source(spark, feed_dir, max_files_per_trigger)
 
     prog_dir = progress_path
     if prog_dir is None and checkpoint_dir is not None:
-        import os as _os
-
-        prog_dir = _os.path.join(checkpoint_dir, "_progress")
+        prog_dir = os.path.join(checkpoint_dir, "_progress")
     # a restarted stream (same checkpoint) APPENDS to the same progress
     # file — continue its numbering so trigger_no stays unique per file
     trigger_no = [_progress_rows_recorded(prog_dir) if prog_dir else 0]
@@ -405,7 +528,9 @@ def run_stream(
         import time as _time
 
         t0 = _time.time()
-        s = _apply_and_compact(df)
+        s = _apply_new_files(df)
+        if s is not None and auto_compact_files is not None:
+            table.compact_small_files(spark, auto_compact_files)
         wall = _time.time() - t0  # apply wall only; maintenance untimed
         this_trigger = trigger_no[0]
         trigger_no[0] += 1
@@ -461,75 +586,11 @@ def run_stream(
                 )
             sync_replica(spark, table, rt, mode=mode)
 
-    def _apply_new_files(df: DataFrame) -> None:
-        import os
-
-        # file discovery is plan metadata — no job, no scan of the batch.
-        # (The previous select(__file).distinct().collect() materialized
-        # every row of every trigger just to enumerate its inputs.)
-        files = list(df.inputFiles())
-        if not files:
-            # defensive fallback for sources that don't expose inputFiles
-            files = [r[0] for r in df.select("__file").distinct().collect()]
-        if not files:
-            return
-        # Idempotence is per INPUT FILE: maxFilesPerTrigger can split one
-        # segment's files across triggers, so marking a whole segment done
-        # on its first partial delivery would silently drop the rest (the
-        # round-1 bug, masked by a feed writer that happened to emit fewer
-        # files per segment than the trigger size). After checkpoint loss,
-        # Spark re-delivers old files grouped differently — the per-file
-        # ledger no-ops them regardless of grouping. A segment moves to the
-        # compact per-segment map (and its file entries are pruned) only
-        # once EVERY file in its directory has been applied. Segments are
-        # immutable by contract (like the reference's archives).
-        def seg(f: str) -> str:
-            return _segment_relative(f).split("/")[0]
-
-        done_segs = table.committed_segments()
-        done_inputs = table.committed_inputs()
-        # refuse a file appended to a COMPLETED segment before the
-        # name-membership skip below can silently drop it (shared with
-        # route_stream — listing vs completion fingerprint, with the
-        # legacy batch-id fallback; see the helper's docstring)
-        check_segment_immutability(
-            feed_dir, [seg(f) for f in files], [(table, done_segs)]
-        )
-
-        def applied(f: str) -> bool:
-            return seg(f) in done_segs or _segment_relative(f) in done_inputs
-
-        new_files = sorted(f for f in files if not applied(f))
-        if not new_files:
-            return
-        rel_new = [_segment_relative(f) for f in new_files]
-        applied_after = done_inputs | set(rel_new)
-        # the ledger stores URI-style names (input_file_name/inputFiles may
-        # percent-encode); the directory listing is raw — decode the ledger
-        # side for the completion comparison or a file with an encodable
-        # character in its name would keep its segment "incomplete" forever
-        from urllib.parse import unquote
-
-        applied_decoded = {unquote(x) for x in applied_after}
-        # a COMPLETED segment is ledgered under its content fingerprint
-        # (all its files), so a later batch replay of the same feed proves
-        # same-name-same-content and skips — while a reused segment name
-        # with different content is refused instead of silently dropped
-        complete_segs: dict[str, str] = {}
-        for sname in sorted({seg(f) for f in new_files}):
-            allf = segment_listing(feed_dir, sname)
-            if allf and allf <= applied_decoded:
-                complete_segs[sname] = batch_fingerprint(sorted(allf))
-        bid = batch_fingerprint(new_files)
-        # symmetric normalized identity matching (shared helper — see
-        # new_files_predicate for the encoding-drift contract); already-
-        # applied sibling files are excluded so a form-decode collision
-        # cannot re-admit their rows
-        new_set = set(new_files)
-        rel_applied = [_segment_relative(f) for f in files if f not in new_set]
-        batch_df = df.filter(
-            new_files_predicate(rel_new, feed_dir=feed_dir, rel_applied=rel_applied)
-        ).drop("__file")
+    def _apply_new_files(df: DataFrame):
+        trig = _resolve_trigger(df, feed_dir, [table])
+        if trig is None:
+            return None
+        bid, rel_new, complete_segs, batch_df = trig
         if neardup_index_path is not None:
             batch_df = _neardup_gate(
                 spark, batch_df, neardup_index_path, neardup_threshold, bid
@@ -539,7 +600,7 @@ def run_stream(
             table,
             batch_df,
             bid,
-            source_files=sorted({seg(f) for f in new_files}),
+            source_files=sorted({r.split("/")[0] for r in rel_new}),
             fail_threshold=fail_threshold,
             segments=complete_segs,
             input_files=rel_new,
@@ -566,24 +627,12 @@ def run_stream(
             ),
         )
 
-    def _apply_and_compact(df: DataFrame):
-        s = _apply_new_files(df)
-        if s is not None and auto_compact_files is not None:
-            table.compact_small_files(spark, auto_compact_files)
-        return s
-
-    writer = (
-        src.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    q = _drain(src, checkpoint_dir, available_now, _apply)
     if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
         if mv_path is not None:
             from etl_spark.lake.mv import ConvSummaryMV
 
             ConvSummaryMV(mv_path).refresh(spark, table)
         if progress_fold_every is not None and prog_dir is not None:
             fold_progress(spark, prog_dir)  # drained table is current
-        return q
-    return writer.start()
+    return q

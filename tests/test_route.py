@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from etl_spark.cdc.apply import BatchFailedError
 from etl_spark.cdc.gen import change_feed_df, write_feed
 from etl_spark.cdc.route import UnknownRouteError, replay_feed_routed, route_batch
 from etl_spark.lake import LakeCatalog
@@ -70,6 +71,34 @@ def test_unknown_table_policy(spark, cat):
     out = route_batch(spark, cat, b, "seg-x", on_unknown="skip")
     assert out["!unknown"].events_in == 1
     assert cat.load_table("raw.chat").read(spark).count() == 0
+
+    # a NULL or empty route value names no table: unknown too — refused,
+    # or counted under '!unknown' — never dropped uncounted
+    blank = spark.createDataFrame(rows, CHANGE_SCHEMA).withColumn(
+        "tbl", F.lit(None).cast("string")
+    )
+    with pytest.raises(UnknownRouteError):
+        route_batch(spark, cat, blank, "seg-n")
+    blank = blank.unionByName(blank.withColumn("tbl", F.lit("")))
+    out = route_batch(spark, cat, blank, "seg-n", on_unknown="skip")
+    assert out["!unknown"].events_in == 2
+
+    # the zero-row guard rides the route probe, checked before any apply:
+    # an empty batch that should have had rows commits nothing anywhere;
+    # a genuinely empty one commits a counters-only version per owned table
+    owned = ["raw.chat", "raw.agent"]
+    v0 = {i: cat.load_table(i).current_version() for i in owned}
+    empty = b.limit(0)
+    with pytest.raises(BatchFailedError):
+        route_batch(spark, cat, empty, "seg-e", ensure=owned,
+                    expect_rows=lambda: True)
+    assert v0 == {i: cat.load_table(i).current_version() for i in owned}
+    out = route_batch(spark, cat, empty, "seg-e", ensure=owned,
+                      expect_rows=lambda: False)
+    assert set(out) == set(owned) and all(s.events_in == 0 for s in out.values())
+    assert {i: v0[i] + 1 for i in owned} == {
+        i: cat.load_table(i).current_version() for i in owned
+    }
 
 
 def test_transactional_routing_is_atomic(spark, cat):
@@ -136,17 +165,30 @@ def test_replay_feed_routed_matches_per_table_replay(spark, cat, tmpdir_path):
 
 def test_route_stream_drains_and_resumes(spark, cat, tmpdir_path):
     from etl_spark.cdc.route import route_stream
+    from etl_spark.cdc.stream import progress_df
 
     feed = _tagged(spark, 6000, seed=21)
     feed_dir = os.path.join(tmpdir_path, "sfeed")
     write_feed(feed, feed_dir)
     ck = os.path.join(tmpdir_path, "ckpt")
-    route_stream(spark, cat, feed_dir, ck, ["raw.chat", "raw.agent"])
+    q = route_stream(spark, cat, feed_dir, ck, ["raw.chat", "raw.agent"])
     counts = {
         i: cat.load_table(i).read(spark).count()
         for i in ("raw.chat", "raw.agent")
     }
     assert all(v > 0 for v in counts.values())
+    # one progress row per trigger, counters summed over the owned tables
+    rows = progress_df(spark, os.path.join(ck, "_progress"), dedup=False).collect()
+    assert sorted(r["epoch_id"] for r in rows) == list(
+        range(q.lastProgress["batchId"] + 1)
+    )
+    for r in rows:
+        assert r["events_in"] == (
+            r["applied"] + r["failed"] + r["late_dropped"] + r["dup_dropped"]
+        )
+    assert sum(r["events_in"] for r in rows) == spark.read.parquet(
+        f"{feed_dir}/*"
+    ).count()
 
     # checkpoint loss: a fresh checkpoint re-delivers everything; the
     # per-table ledgers + LWW make the re-drain a no-op on final state
