@@ -107,7 +107,7 @@ def new_files_predicate(
     url-decoded form, against a want-set that includes every file's raw,
     percent-decoded (``unquote``) AND form-decoded (``unquote_plus``)
     identity — because the two sides can disagree on URI encoding
-    (``inputFiles()`` vs ``input_file_name()``), and Spark's only decode
+    (a file list vs ``input_file_name()``), and Spark's only decode
     builtin (``url_decode``) is FORM decoding, which turns a literal
     ``+`` in a file name into a space while Python's ``unquote`` keeps
     it. A one-sided normalization silently drops such a file's rows

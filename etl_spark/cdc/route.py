@@ -289,9 +289,9 @@ def route_stream(
     prog_dir = os.path.join(checkpoint_dir, "_progress")
     trigger_no = [_progress_rows_recorded(prog_dir)]
 
-    def _apply(df: DataFrame, epoch_id: int) -> None:
+    def _apply(df: DataFrame, epoch_id: int, files: list[str]) -> None:
         t0 = time.time()
-        trig = _resolve_trigger(df, feed_dir, tables)
+        trig = _resolve_trigger(df, files, feed_dir, tables)
         s = None
         if trig is not None:
             bid, rel_new, complete, batch_df = trig

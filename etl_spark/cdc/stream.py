@@ -34,6 +34,7 @@ mirrors the reference's out-of-band update-schema deploy step
 
 from __future__ import annotations
 
+import json
 import os
 from urllib.parse import unquote
 
@@ -152,6 +153,8 @@ PROGRESS_SCHEMA = T.StructType(
         T.StructField("epoch_id", T.LongType()),
         T.StructField("batch_id", T.StringType()),
         T.StructField("started_at", T.TimestampType()),
+        # run_stream: resolve, gate, apply and table compaction (index,
+        # MV, replica maintenance untimed); route_stream: resolve + route
         T.StructField("wall_sec", T.DoubleType()),
         T.StructField("events_in", T.LongType()),
         T.StructField("applied", T.LongType()),
@@ -359,10 +362,11 @@ def _trigger_bookkeeping(
     if not new_files:
         return None
     rel_new = [rels[f] for f in new_files]
-    # the ledger stores URI-style names (input_file_name/inputFiles may
-    # percent-encode); the directory listing is raw — decode the ledger
-    # side for the completion comparison or a file with an encodable
-    # character in its name would keep its segment "incomplete" forever
+    # the ledger stores URI-style names (input_file_name and the
+    # checkpoint log percent-encode); the directory listing is raw —
+    # decode the ledger side for the completion comparison or a file with
+    # an encodable character in its name would keep its segment
+    # "incomplete" forever
     applied_decoded = [
         {unquote(x) for x in inps | set(rel_new)} for _t, _segs, inps in ledgers
     ]
@@ -383,20 +387,86 @@ def _trigger_bookkeeping(
     return batch_fingerprint(new_files), rel_new, rel_applied, complete_segs
 
 
+class CheckpointLogError(RuntimeError):
+    """A micro-batch's input files cannot be read from the query's own
+    checkpoint (missing or unparseable ``offsets``/``sources`` entry)."""
+
+
+def _log_lines(path: str) -> list[str]:
+    """A checkpoint log file's lines after its ``v<N>`` header."""
+    try:
+        with open(path, encoding="utf-8") as f:
+            lines = f.read().splitlines()
+    except OSError as e:
+        raise CheckpointLogError(f"cannot read {path}: {e}") from e
+    if not lines or not lines[0].startswith("v"):
+        raise CheckpointLogError(f"{path}: no version header")
+    return lines[1:]
+
+
+def _source_log_offset(ckpt: str, epoch: int) -> int:
+    """The file source's log offset in ``offsets/<epoch>`` (-1: none yet)."""
+    path = os.path.join(ckpt, "offsets", str(epoch))
+    lines = _log_lines(path)
+    try:
+        # the batch metadata line, then one offset per source ("-": none)
+        off = lines[1].strip()
+        return -1 if off == "-" else int(json.loads(off)["logOffset"])
+    except (IndexError, ValueError, KeyError, TypeError) as e:
+        raise CheckpointLogError(f"{path}: unparseable file-source offset") from e
+
+
+def _source_log_batch(src_dir: str, k: int) -> list[str]:
+    """Files of file-source log batch ``k``: its own entry ``<k>``, or,
+    once that is compacted away, the covering ``<c>.compact`` (the first
+    ``c >= k``; it holds every entry up to ``c``)."""
+    path = os.path.join(src_dir, str(k))
+    if not os.path.exists(path):
+        try:
+            names = os.listdir(src_dir)
+        except OSError as e:
+            raise CheckpointLogError(f"cannot list {src_dir}: {e}") from e
+        cover = min(
+            (c for c in (n[: -len(".compact")] for n in names if n.endswith(".compact"))
+             if c.isdigit() and int(c) >= k),
+            key=int, default=None,
+        )
+        if cover is None:
+            raise CheckpointLogError(f"{src_dir}: no log entry for batch {k}")
+        path = os.path.join(src_dir, f"{cover}.compact")
+    try:
+        entries = [json.loads(ln) for ln in _log_lines(path) if ln.strip()]
+        return [e["path"] for e in entries if int(e["batchId"]) == k]
+    except (ValueError, KeyError, TypeError) as e:
+        raise CheckpointLogError(f"{path}: unparseable file-source entry") from e
+
+
+def _trigger_files(checkpoint_dir: str, epoch_id: int) -> list[str]:
+    """Input files of micro-batch ``epoch_id``, spelled exactly as
+    ``input_file_name()`` spells them, read from the query's own
+    checkpoint without a Spark job: ``offsets/<epoch-1>`` and
+    ``offsets/<epoch>`` bound the file-source log range, and
+    ``sources/0`` lists each log batch's files. ``df.inputFiles()`` is
+    empty for a ``foreachBatch`` micro-batch, and scanning the batch for
+    its ``__file`` values costs 2 jobs per trigger. Raises
+    ``CheckpointLogError`` when the log is missing or unreadable: an
+    empty list would commit the offset and lose the files."""
+    ckpt = os.path.abspath(checkpoint_dir.removeprefix("file://").removeprefix("file:"))
+    end = _source_log_offset(ckpt, epoch_id)
+    start = _source_log_offset(ckpt, epoch_id - 1) if epoch_id > 0 else -1
+    src_dir = os.path.join(ckpt, "sources", "0")
+    return [p for k in range(start + 1, end + 1) for p in _source_log_batch(src_dir, k)]
+
+
 def _resolve_trigger(
-    df: DataFrame, feed_dir: str, tables: list[LakeTable]
+    df: DataFrame, files: list[str], feed_dir: str, tables: list[LakeTable]
 ) -> tuple[str, list[str], dict[str, str], DataFrame] | None:
-    """Resolve one micro-batch of ``_feed_source`` against the sink
-    tables' ledgers → ``(bid, rel_new, complete_segs, batch_df)``, or
-    None when nothing is new. ``bid`` is the fingerprint of the new
-    input files (NOT Spark's epoch id, which changes on redelivery);
-    ``batch_df`` holds exactly the new files' rows, ``__file`` dropped."""
-    # inputFiles() is plan metadata (no job), but a micro-batch of the
-    # streaming file source returns no files from it under Spark 4.1, so
-    # the fallback scan + distinct (2 jobs under AQE) runs every trigger
-    files = list(df.inputFiles())
-    if not files:
-        files = [r[0] for r in df.select("__file").distinct().collect()]
+    """Resolve one micro-batch of ``_feed_source`` (its input ``files``,
+    from ``_trigger_files``) against the sink tables' ledgers → ``(bid,
+    rel_new, complete_segs, batch_df)``, or None when nothing is new.
+    ``bid`` is the fingerprint of the new input files (NOT Spark's epoch
+    id, which changes on redelivery); ``batch_df`` holds exactly the new
+    files' rows, ``__file`` dropped. Launches no Spark job."""
     if not files:
         return None
     trig = _trigger_bookkeeping(
@@ -416,10 +486,15 @@ def _resolve_trigger(
 
 
 def _drain(src: DataFrame, checkpoint_dir: str, available_now: bool, on_batch):
-    """Run ``on_batch(df, epoch_id)`` per micro-batch of ``src`` under the
-    checkpoint: drained to completion (availableNow) or left running.
-    Returns the StreamingQuery either way."""
-    writer = src.writeStream.foreachBatch(on_batch).option(
+    """Run ``on_batch(df, epoch_id, files)`` per micro-batch of ``src``
+    under the checkpoint, ``files`` being the batch's input files
+    (``_trigger_files``): drained to completion (availableNow) or left
+    running. Returns the StreamingQuery either way."""
+
+    def _batch(df: DataFrame, epoch_id: int) -> None:
+        on_batch(df, epoch_id, _trigger_files(checkpoint_dir, epoch_id))
+
+    writer = src.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir
     )
     if not available_now:
@@ -503,7 +578,8 @@ def run_stream(
     re-delivered trigger.
 
     ``progress_path``: per-trigger progress telemetry table (defaults to
-    ``<checkpoint_dir>/_progress``) — one row per trigger with wall time,
+    ``<checkpoint_dir>/_progress``) — one row per trigger with wall time
+    (resolve, gate, apply and table compaction; later maintenance untimed),
     merge counters (invariant-consistent), throughput, and skip/no-op
     flags; read it back with ``progress_df``. Pass an explicit path to
     relocate, or rely on the default next to the checkpoint.
@@ -524,14 +600,16 @@ def run_stream(
     # file — continue its numbering so trigger_no stays unique per file
     trigger_no = [_progress_rows_recorded(prog_dir) if prog_dir else 0]
 
-    def _apply(df: DataFrame, epoch_id: int) -> None:
+    def _apply(df: DataFrame, epoch_id: int, files: list[str]) -> None:
         import time as _time
 
         t0 = _time.time()
-        s = _apply_new_files(df)
+        s = _apply_new_files(df, files)
         if s is not None and auto_compact_files is not None:
             table.compact_small_files(spark, auto_compact_files)
-        wall = _time.time() - t0  # apply wall only; maintenance untimed
+        # resolve, gate, apply and table compaction; the index, MV,
+        # progress and replica maintenance below is untimed
+        wall = _time.time() - t0
         this_trigger = trigger_no[0]
         trigger_no[0] += 1
         # near-dup index maintenance on its own cadence: bound the probe
@@ -563,9 +641,9 @@ def run_stream(
             mv.refresh(spark, table)
             mv_stats = mv.last_refresh_stats
         # recorded AFTER maintenance so the row carries the MV's
-        # arith/re-agg split; wall_sec is still the apply wall alone,
-        # and batch_id-keyed dedup (progress_df) absorbs the slightly
-        # wider crash window between commit and append
+        # arith/re-agg split; wall_sec still stops before the index and
+        # MV maintenance, and batch_id-keyed dedup (progress_df) absorbs
+        # the slightly wider crash window between commit and append
         if prog_dir is not None:
             _record_progress(
                 spark, prog_dir, this_trigger, int(epoch_id), s,
@@ -586,8 +664,8 @@ def run_stream(
                 )
             sync_replica(spark, table, rt, mode=mode)
 
-    def _apply_new_files(df: DataFrame):
-        trig = _resolve_trigger(df, feed_dir, [table])
+    def _apply_new_files(df: DataFrame, files: list[str]):
+        trig = _resolve_trigger(df, files, feed_dir, [table])
         if trig is None:
             return None
         bid, rel_new, complete_segs, batch_df = trig

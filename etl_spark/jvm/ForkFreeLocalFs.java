@@ -1,0 +1,47 @@
+package etl_spark.jvm;
+
+import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
+
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.ChecksumFs;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
+import org.apache.hadoop.fs.Path;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
+
+/** FileContext twin of ForkFreeLocalFileSystem (stock: LocalFs over RawLocalFs). */
+public class ForkFreeLocalFs extends ChecksumFs {
+  public ForkFreeLocalFs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+    super(new Raw(uri, conf));
+  }
+
+  static class Raw extends DelegateToFileSystem {
+    Raw(URI uri, Configuration conf) throws IOException, URISyntaxException {
+      super(uri, new ForkFreeLocalFileSystem.Raw(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
+    }
+
+    @Override
+    public int getUriDefaultPort() {
+      return -1;
+    }
+
+    @Override
+    public FsServerDefaults getServerDefaults(Path f) throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    @Deprecated
+    public FsServerDefaults getServerDefaults() throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public boolean isValidName(String src) {
+      return true;
+    }
+  }
+}
